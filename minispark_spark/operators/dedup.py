@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from minispark_spark.functions import hashing, pairs, text
-from minispark_spark.registry import query
+from minispark_spark.registry import query, shared
 from minispark_spark.sources.tables import load_table
 
 N_PERMS = 16
@@ -49,18 +49,12 @@ _SIMHASH_AB = [
 ]
 
 
-_SHINGLE_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _shingled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, shingle_hash) — distinct word-3-gram shingle hashes,
     CACHED once per (session, sf_dir) and shared across the whole dedup
     family: minhash, simhash, and n-gram Jaccard all start from this
     frame, so computing it once turns three shingle passes into one —
     the curated-intermediate reuse a production pipeline would do.
-    ``registry.clear_plan_cache`` drops the handle (bench clears Spark's
-    cache between passes; a stale handle would silently re-execute its
-    multiply-referenced subtrees per reference).
 
     One vectorized Arrow pass (shingled_docs), then CACHED PARTITIONED
     BY doc_id: every family consumer's first step is a per-doc
@@ -70,17 +64,16 @@ def _shingled(spark: SparkSession, sf_dir: str) -> DataFrame:
     and dropping it (first cut of the round-8 kernel) measurably slowed
     every consumer despite the cheaper build.
     """
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _SHINGLE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    # Repartition to all cores first: the token-hash kernel is the
-    # narrow heavy step and the parquet source may arrive in few splits.
-    docs = load_table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
-    _SHINGLE_CACHE[key] = df = shingled_docs(docs).repartition("doc_id").cache()
-    return df
+
+    def build() -> DataFrame:
+        # Repartition to all cores first: the token-hash kernel is the
+        # narrow heavy step and the parquet source may arrive in few splits.
+        docs = load_table(spark, sf_dir, "documents").repartition(
+            spark.sparkContext.defaultParallelism
+        )
+        return shingled_docs(docs).repartition("doc_id").cache()
+
+    return shared(spark, ("shingles", sf_dir), build)
 
 
 def shingled_docs(docs: DataFrame) -> DataFrame:
@@ -118,9 +111,11 @@ def shingled_docs(docs: DataFrame) -> DataFrame:
                 toks = ws.split((text or "").strip(" "))
                 if len(toks) < 3:
                     continue
-                arr = np.array(toks, dtype="U")
+                # Explicit little-endian UCS-4 on both sides, so the
+                # view reads code points on any host byte order.
+                arr = np.array(toks, dtype="<U")
                 n = len(toks)
-                codes = arr.view(np.uint32).reshape(n, -1).astype(np.int64)
+                codes = arr.view("<u4").reshape(n, -1).astype(np.int64)
                 lens = np.fromiter((len(t) for t in toks), np.int64, n)
                 acc = np.zeros(n, np.int64)
                 for j in range(codes.shape[1]):
@@ -609,12 +604,6 @@ _SIMHASH_BAND_UNION_SQL = " UNION ALL ".join(
 SIMHASH_BUCKET_CAP = 32
 
 
-# Guard intermediates cached per plan build; unpersisted together with
-# the plan memo (registry.clear_plan_cache) — same lifecycle, so the
-# cached frames can't outlive the plans that reference them.
-_GUARD_CACHE: list[DataFrame] = []
-
-
 def _band_buckets(sigs: DataFrame, with_sig: bool) -> DataFrame:
     """(doc_id[, sig], band, bucket) — one row per (doc, band); shared
     by the candidate generator and the oversized-bucket observability
@@ -682,9 +671,7 @@ def simhash_candidate_pairs(sigs: DataFrame, cap: int = SIMHASH_BUCKET_CAP) -> D
     # Tier-1 state: doc_ids only. Carrying the 8-byte sig through the
     # banding shuffle for a guard that is dormant on healthy corpora
     # measured +65% on dedup_simhash at sf0.1 — the oversized tiers
-    # below re-derive sigs for their (few) buckets instead. Registered
-    # in _GUARD_CACHE; registry.clear_plan_cache unpersists it with the
-    # plan memo.
+    # below re-derive sigs for their (few) buckets instead.
     grouped = (
         _band_buckets(sigs, with_sig=False)
         .groupBy("band", "bucket")
@@ -692,7 +679,6 @@ def simhash_candidate_pairs(sigs: DataFrame, cap: int = SIMHASH_BUCKET_CAP) -> D
         .filter(F.size("ids") >= 2)
         .cache()
     )
-    _GUARD_CACHE.append(grouped)
     max_sz = grouped.agg(F.max(F.size("ids"))).collect()[0][0] or 0
     small = (
         (grouped if max_sz <= cap else grouped.filter(F.size("ids") <= cap))

@@ -20,14 +20,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from minispark_spark.registry import query
+from minispark_spark.registry import query, shared
 from minispark_spark.sources.tables import load_table
 
 SCALE = 1_000_000_000
 N_ITER = 3
-
-
-_EDGE_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 
 def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -38,24 +35,22 @@ def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     CACHED per (session, sf_dir) and shared across the graph family —
     pagerank, triangles, and BFS all start from this frame, so the
-    orders ⨝ lineitem + distinct builds once (the _SHINGLE_CACHE
-    pattern; lifecycle = registry.clear_plan_cache)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _EDGE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    _EDGE_CACHE[key] = df = (
-        orders.join(li, F.col("o_orderkey") == F.col("l_orderkey"))
-        .select(
-            (F.col("o_custkey") * 2).alias("src"),
-            (F.col("l_suppkey") * 2 + 1).alias("dst"),
+    orders ⨝ lineitem + distinct builds once."""
+
+    def build() -> DataFrame:
+        orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+        li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+        return (
+            orders.join(li, F.col("o_orderkey") == F.col("l_orderkey"))
+            .select(
+                (F.col("o_custkey") * 2).alias("src"),
+                (F.col("l_suppkey") * 2 + 1).alias("dst"),
+            )
+            .distinct()
+            .cache()
         )
-        .distinct()
-        .cache()
-    )
-    return df
+
+    return shared(spark, ("graph_edges", sf_dir), build)
 
 
 # Broadcast the rank vector when nodes * ~24 B/row stays well under the

@@ -47,7 +47,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
-from minispark_spark.registry import query
+from minispark_spark.registry import query, shared
 from minispark_spark.sources.tables import fan_out, load_table
 
 K = 8
@@ -147,15 +147,25 @@ def _assignments(q: DataFrame, cents: np.ndarray) -> DataFrame:
     return q.mapInPandas(batches, schema=_ASSIGN_SCHEMA)
 
 
-_FIT_CACHE: dict[tuple[str, str, int, int], tuple[DataFrame, np.ndarray]] = {}
-# The table-backed quantized corpus is k-independent — share ONE cached
-# copy across every fit of a (session, sf_dir) instead of pinning a
-# separate identical cache per (k, n_iters) key (the k-curve alone used
-# to build three). Same lifecycle as _FIT_CACHE (registry.clear_plan_cache).
-_Q_CACHE: dict[tuple[str, str], DataFrame] = {}
-# Per-emb (override-frame) quantized caches: not keyed — just tracked so
-# registry.clear_plan_cache can unpersist them (round-8 ADVICE hygiene).
-_EMB_Q_CACHE: list[DataFrame] = []
+def _corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The table-backed quantized corpus, cached and shared per
+    (session, sf_dir): it is k-independent, so every table-backed fit
+    (the k-curve's three included) reads one copy.
+
+    NOT fanned out (tried and reverted this round): unlike the PQ/ADC
+    and codec scans, a k=8 Lloyd pass is light per row, and at gate
+    SFs the corpus is ~2k rows — 32-wide partitions put ~60 rows per
+    task, so every per-round barrier (init + n_iters + assignment)
+    pays 32-task scheduling + straggler exposure for microseconds of
+    numpy. Interleaved A/B microbench measured the fan-out version
+    slower AND far noisier (kmeans_clusters 1.4-1.8 s stable without
+    vs 2.3-6.3 s with, under ambient host load). On a real corpus the
+    scan is already wide and fan_out would be a no-op anyway."""
+    return shared(spark, ("kmeans_corpus", sf_dir), lambda: _quantized(spark, sf_dir).cache())
+
+
+def _fit_key(sf_dir: str, k: int, n_iters: int) -> tuple:
+    return ("kmeans_fit", sf_dir, k, n_iters)
 
 
 def kmeans_fit(
@@ -168,30 +178,18 @@ def kmeans_fit(
     """(cached quantized vectors, trained integer centroids).
     ``emb`` overrides the default embeddings table — any
     (vec_id, embedding array<float>) frame trains the same way.
-    Table-backed fits are memoized per (session, sf_dir, k, n_iters):
+    Table-backed fits are shared per (session, sf_dir, k, n_iters):
     semantic_dedup, ann_ivfpq_* and kmeans_clusters share trainings
-    instead of re-running the sequential Lloyd jobs (cache lifecycle =
-    registry.clear_plan_cache, same as pq._TRAIN_CACHE)."""
-    key = (spark.sparkContext.applicationId, sf_dir, k, n_iters)
-    if emb is None and key in _FIT_CACHE:
-        return _FIT_CACHE[key]
-    # NOT fanned out (tried and reverted this round): unlike the PQ/ADC
-    # and codec scans, a k=8 Lloyd pass is light per row, and at gate
-    # SFs the corpus is ~2k rows — 32-wide partitions put ~60 rows per
-    # task, so every per-round barrier (init + n_iters + assignment)
-    # pays 32-task scheduling + straggler exposure for microseconds of
-    # numpy. Interleaved A/B microbench measured the fan-out version
-    # slower AND far noisier (kmeans_clusters 1.4-1.8 s stable without
-    # vs 2.3-6.3 s with, under ambient host load). On a real corpus the
-    # scan is already wide and fan_out would be a no-op anyway.
+    instead of re-running the sequential Lloyd jobs."""
     if emb is None:
-        qkey = (spark.sparkContext.applicationId, sf_dir)
-        q = _Q_CACHE.get(qkey)
-        if q is None:
-            _Q_CACHE[qkey] = q = _quantized(spark, sf_dir).cache()
-    else:
-        q = _quantized(spark, sf_dir, emb).cache()
-        _EMB_Q_CACHE.append(q)
+        return shared(
+            spark, _fit_key(sf_dir, k, n_iters), lambda: _lloyd(_corpus(spark, sf_dir), k, n_iters)
+        )
+    return _lloyd(_quantized(spark, sf_dir, emb).cache(), k, n_iters)
+
+
+def _lloyd(q: DataFrame, k: int, n_iters: int) -> tuple[DataFrame, np.ndarray]:
+    """``n_iters`` integer Lloyd rounds over ``q`` from the first-k init."""
     init = (
         q.orderBy("vec_id").limit(k).collect()
     )  # first-k init: k rows to the driver, bounded
@@ -213,8 +211,6 @@ def kmeans_fit(
             for r in rows:
                 new[cl, r["d"]] = r["s"] // r["n"]  # exact integer floor
         cents = new
-    if emb is None:
-        _FIT_CACHE[key] = (q, cents)
     return q, cents
 
 
@@ -284,46 +280,41 @@ def kmeans_fit_multi(
 ) -> dict[int, tuple[DataFrame, np.ndarray]]:
     """Train every k in ``ks`` over the SAME table-backed corpus with
     one init collect and one partial-sums job per Lloyd round (instead
-    of one per k per round). Results land in ``_FIT_CACHE`` under each
-    k's own key, so they are bit-identical drop-ins for
-    :func:`kmeans_fit` — the first-``max(ks)`` init rows contain every
-    smaller k's first-k init prefix, and each k's integer sums/floor
-    divisions never see another k's state."""
-    todo = sorted(
-        k
-        for k in set(ks)
-        if (spark.sparkContext.applicationId, sf_dir, k, n_iters) not in _FIT_CACHE
-    )
-    if todo:
-        qkey = (spark.sparkContext.applicationId, sf_dir)
-        q = _Q_CACHE.get(qkey)
-        if q is None:
-            _Q_CACHE[qkey] = q = _quantized(spark, sf_dir).cache()
-        init = q.orderBy("vec_id").limit(max(todo)).collect()
-        cents = {
-            k: np.array([r["q"] for r in init[: min(k, len(init))]], dtype=np.int64)
-            .reshape(min(k, len(init)), DIM)
-            for k in todo
-        }
-        for _ in range(n_iters):
-            stats = (
-                _partial_sums_multi(q, [cents[k] for k in todo])
-                .groupBy("ki", "cluster", "d")
-                .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
-                .collect()
-            )  # sum_k k*dim rows — bounded, independent of corpus size
-            new = {k: cents[k].copy() for k in todo}
-            for r in stats:
-                k = todo[r["ki"]]
-                new[k][r["cluster"], r["d"]] = r["s"] // r["n"]
-            cents = new
-        for k in todo:
-            key = (spark.sparkContext.applicationId, sf_dir, k, n_iters)
-            _FIT_CACHE[key] = (q, cents[k])
-    return {
-        k: _FIT_CACHE[(spark.sparkContext.applicationId, sf_dir, k, n_iters)]
-        for k in ks
-    }
+    of one per k per round). Each k is shared under :func:`kmeans_fit`'s
+    own key, so the results are bit-identical drop-ins for it — the
+    first-``max(ks)`` init rows contain every smaller k's first-k init
+    prefix, and each k's integer sums/floor divisions never see another
+    k's state. The smallest k not yet shared trains together with every
+    larger k; a larger k that was already shared keeps its entry."""
+    order = sorted(set(ks))
+    trained: dict[int, tuple[DataFrame, np.ndarray]] = {}
+
+    def build(first: int) -> tuple[DataFrame, np.ndarray]:
+        if first not in trained:
+            todo = [k for k in order if k >= first]
+            q = _corpus(spark, sf_dir)
+            init = q.orderBy("vec_id").limit(max(todo)).collect()
+            cents = {
+                k: np.array([r["q"] for r in init[: min(k, len(init))]], dtype=np.int64)
+                .reshape(min(k, len(init)), DIM)
+                for k in todo
+            }
+            for _ in range(n_iters):
+                stats = (
+                    _partial_sums_multi(q, [cents[k] for k in todo])
+                    .groupBy("ki", "cluster", "d")
+                    .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
+                    .collect()
+                )  # sum_k k*dim rows — bounded, independent of corpus size
+                new = {k: cents[k].copy() for k in todo}
+                for r in stats:
+                    k = todo[r["ki"]]
+                    new[k][r["cluster"], r["d"]] = r["s"] // r["n"]
+                cents = new
+            trained.update((k, (q, cents[k])) for k in todo)
+        return trained[first]
+
+    return {k: shared(spark, _fit_key(sf_dir, k, n_iters), lambda k=k: build(k)) for k in order}
 
 
 def kmeans_assign_multi(

@@ -49,7 +49,7 @@ from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
 from minispark_spark.operators.kmeans import DIM, QSCALE, _quantized
 from minispark_spark.operators.similarity import N_QUERIES, TOP_K
-from minispark_spark.registry import query
+from minispark_spark.registry import query, shared
 from minispark_spark.sources.tables import fan_out
 
 M = 8  # subspaces
@@ -105,15 +105,6 @@ def _assign_sub(sub: np.ndarray, books: np.ndarray) -> np.ndarray:
     return d2.argmin(axis=2)
 
 
-# Trained codebooks keyed like the registry plan memo; cleared with it
-# (registry.clear_plan_cache) so bench passes retrain fairly.
-_TRAIN_CACHE: dict[tuple[str, str, str], tuple[DataFrame, np.ndarray]] = {}
-# The table-backed quantized corpus is tag-independent — share ONE
-# cached copy across all trainings of a (session, sf_dir) so the K=16
-# and K=256 variants don't each derive and pin their own.
-_QUANT_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def quantized_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The table-backed quantized corpus, FANNED OUT and cached — the
     frame every CPU-bound numpy scan (PQ/IVF-PQ training passes, ADC
@@ -121,15 +112,14 @@ def quantized_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet arrives in 1-3 byte-sized partitions at gate SFs, so an
     unfanned scan runs 1-3 wide on a 32-core box (guide §2.5/§4;
     fan_out is a no-op once the corpus scan is already wide). Shared
-    per (session, sf_dir) via _QUANT_CACHE; cleared with the plan memo.
+    per (session, sf_dir): it is tag-independent, so the K=16 and K=256
+    trainings don't each derive and pin their own copy.
     NOTE: kmeans_fit deliberately keeps its own UNfanned copy — a k=8
     Lloyd round is too light per row for 32-task barriers to pay
     (measured revert, operators/kmeans.py)."""
-    qkey = (spark.sparkContext.applicationId, sf_dir)
-    q = _QUANT_CACHE.get(qkey)
-    if q is None:
-        _QUANT_CACHE[qkey] = q = fan_out(_quantized(spark, sf_dir)).cache()
-    return q
+    return shared(
+        spark, ("pq_corpus", sf_dir), lambda: fan_out(_quantized(spark, sf_dir)).cache()
+    )
 
 
 def pq_train(
@@ -142,7 +132,7 @@ def pq_train(
     """(cached quantized vectors, codebooks (M, k, SUBDIM) int64).
 
     All M subspaces train in the SAME pass per round — job count is
-    identical to single-space k-means, not M times it. Memoized per
+    identical to single-space k-means, not M times it. Shared per
     (session, sf_dir, tag): ann_pq_topk and ann_pq_recall share one
     training. ``qframe`` overrides the table-backed quantized vectors
     with any (vec_id, q array<long>) frame (e.g. IVF residuals) —
@@ -156,13 +146,16 @@ def pq_train(
         # width (or poisoning the cache for later ann_pq_* calls). Make
         # the collision impossible rather than a docstring convention.
         raise ValueError("pq_train: a custom qframe or k requires a distinct non-empty tag")
-    key = (spark.sparkContext.applicationId, sf_dir, tag)
-    if key in _TRAIN_CACHE:
-        return _TRAIN_CACHE[key]
-    if qframe is not None:
-        q = qframe.cache()
-    else:
-        q = quantized_corpus(spark, sf_dir)
+
+    def build() -> tuple[DataFrame, np.ndarray]:
+        q = qframe.cache() if qframe is not None else quantized_corpus(spark, sf_dir)
+        return q, _train_books(q, k)
+
+    return shared(spark, ("pq_train", sf_dir, tag), build)
+
+
+def _train_books(q: DataFrame, k: int) -> np.ndarray:
+    """``N_ITERS`` rounds of all-M-subspace PQ training over ``q``."""
     init = q.orderBy("vec_id").limit(k).collect()  # bounded: k rows
     books = np.array([r["q"] for r in init], dtype=np.int64)  # (K, DIM)
     books = _sub(books).transpose(1, 0, 2).copy()  # (M, K, SUBDIM)
@@ -210,8 +203,7 @@ def pq_train(
         for r in stats:
             new[r["m"], r["cw"], r["d"]] = r["s"] // r["n"]
         books = new
-    _TRAIN_CACHE[key] = (q, books)
-    return q, books
+    return books
 
 
 def _codebook_chain(

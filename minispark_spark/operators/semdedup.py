@@ -136,19 +136,6 @@ def semantic_dup_flags(
     ).select("vec_id", "cluster", (~F.col("is_dup")).alias("keep"))
 
 
-# Cached frames owned by this module (assignments, the k-curve's
-# multi-assignment): unpersisted + dropped by registry.clear_plan_cache
-# so a long-lived session doesn't accumulate pinned storage blocks
-# (round-8 ADVICE item).
-_CACHED: list[DataFrame] = []
-
-
-def _cache(df: DataFrame) -> DataFrame:
-    df = df.cache()
-    _CACHED.append(df)
-    return df
-
-
 def _dups_from_assign(
     assign: DataFrame, emb: DataFrame, threshold: float, k: int
 ) -> DataFrame:
@@ -296,7 +283,7 @@ def _dup_components(
         assign = kmeans_fit_predict(spark, sf_dir, k, n_iters)
     else:
         assign = kmeans_fit_predict(spark, "", k, n_iters, emb=emb)
-    assign = _cache(assign)
+    assign = assign.cache()
     if max_pairs is not None:
         budget = assign.groupBy("cluster").agg(
             F.count(F.lit(1)).cast("long").alias("n")
@@ -384,7 +371,7 @@ def semantic_dedup_k_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tried in round 7 and REVERTED — on local[N] the trainings' Lloyd
     # barriers contend for the same cores; fusing the scans removes the
     # redundancy without concurrency.)
-    multi = _cache(kmeans_assign_multi(spark, sf_dir, K_CURVE, N_ITERS))
+    multi = kmeans_assign_multi(spark, sf_dir, K_CURVE, N_ITERS).cache()
     # ONE bounded collect serves every per-k metric: the joint cluster-
     # size table has at most prod(K_CURVE) rows (512 here), from which
     # each k's per-cluster counts — and so clusters_used, the exact

@@ -179,9 +179,6 @@ _LSH_BUCKET_UNION_SQL = " UNION ALL ".join(
 # matches at every gate SF.
 EMB_LSH_BUCKET_CAP = 64
 
-# Cached grouped-bucket frames; registry.clear_plan_cache unpersists.
-_EMB_GUARD_CACHE: list[DataFrame] = []
-
 _VEC_CHAIN_EXPR = (
     "transform(slice({a}, 1, size({a}) - 1),"
     " (x, i) -> struct(x AS vec_a, {a}[i + 1] AS vec_b))"
@@ -227,7 +224,6 @@ def lsh_candidate_pairs_guarded(
         .filter(F.size("ids") >= 2)
         .cache()
     )
-    _EMB_GUARD_CACHE.append(grouped)
     max_sz = grouped.agg(F.max(F.size("ids"))).collect()[0][0] or 0
     small = (
         (grouped if max_sz <= cap else grouped.filter(F.size("ids") <= cap))

@@ -22,8 +22,9 @@ Determinism contract (so Spark and DuckDB hash-match bit-for-bit):
 
 from __future__ import annotations
 
+import threading
 from dataclasses import dataclass
-from typing import Callable
+from typing import Callable, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -40,8 +41,6 @@ class QuerySpec:
 
 REGISTRY: dict[str, QuerySpec] = {}
 
-
-_PLAN_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 
 # Runtime-settable confs every query depends on, applied defensively in
 # case the caller's session (e.g. the driver's own SparkSession) was
@@ -61,6 +60,32 @@ _SESSION_DEFAULTS = {
     "spark.sql.legacy.bucketedTableScan.outputOrdering": "true",
 }
 
+_SHARED: dict[tuple, object] = {}
+_KEY_LOCKS: dict[tuple, threading.Lock] = {}
+_SESSIONS: dict[str, SparkSession] = {}
+_LOCK = threading.Lock()  # guards the three dicts above, never a build
+_MISSING = object()
+
+T = TypeVar("T")
+
+
+def shared(spark: SparkSession, key: tuple, build: Callable[[], T]) -> T:
+    """``build()``, memoized per ``(applicationId, *key)`` until
+    :func:`clear_plan_cache` — the one store for plans and for the
+    intermediates several queries share (shingles, graph edges, k-means
+    and PQ trainings). Each key builds once even when threads ask at
+    the same time; the lock is per key, so a build may ask for other
+    keys. A build that raises leaves no entry."""
+    full = (spark.sparkContext.applicationId, *key)
+    with _LOCK:
+        _SESSIONS[full[0]] = spark
+        lock = _KEY_LOCKS.setdefault(full, threading.Lock())
+    with lock:
+        value = _SHARED.get(full, _MISSING)
+        if value is _MISSING:
+            value = _SHARED[full] = build()
+        return value  # type: ignore[return-value]
+
 
 def _memoized(name: str, fn: QueryFn) -> QueryFn:
     """Plan reuse across invocations of the same (session, sf_dir, query)
@@ -69,63 +94,30 @@ def _memoized(name: str, fn: QueryFn) -> QueryFn:
     reused across its timed runs (reference execution.py:100-115)."""
 
     def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        key = (spark.sparkContext.applicationId, sf_dir, name)
-        df = _PLAN_CACHE.get(key)
-        if df is None:
+        def build() -> DataFrame:
             for k, v in _SESSION_DEFAULTS.items():
                 spark.conf.set(k, v)
-            _PLAN_CACHE[key] = df = fn(spark, sf_dir)
-        return df
+            return fn(spark, sf_dir)
+
+        return shared(spark, ("plan", sf_dir, name), build)
 
     return wrapped
 
 
 def clear_plan_cache() -> None:
-    """Drop memoized plans. Callers that also ``spark.catalog.clearCache()``
-    (bench does, between passes) MUST clear this too: a memoized plan
-    whose ``.cache()`` marks were unpersisted re-executes each
-    multiply-referenced subtree once per reference (simhash scans its
-    signature frame 3x, minhash its shingles 4x) — slower than simply
-    rebuilding the plan and re-materializing."""
-    _PLAN_CACHE.clear()
-    # Shared curated intermediates keyed to the same lifecycle. Cached
-    # DataFrames are UNPERSISTED as the handle is dropped (round-8
-    # ADVICE): dropping only the dict entry left the executor storage
-    # for the old copies pinned until an external catalog clearCache.
-    from minispark_spark.operators import dedup, graph, kmeans, pq, semdedup
-
-    for df in dedup._SHINGLE_CACHE.values():
-        df.unpersist()
-    dedup._SHINGLE_CACHE.clear()
-    for df in dedup._GUARD_CACHE:
-        df.unpersist()
-    dedup._GUARD_CACHE.clear()
-    from minispark_spark.operators import similarity
-
-    for df in similarity._EMB_GUARD_CACHE:
-        df.unpersist()
-    similarity._EMB_GUARD_CACHE.clear()
-    for df in graph._EDGE_CACHE.values():
-        df.unpersist()
-    graph._EDGE_CACHE.clear()
-    for q, _cents in kmeans._FIT_CACHE.values():
-        q.unpersist()
-    kmeans._FIT_CACHE.clear()
-    for df in kmeans._Q_CACHE.values():
-        df.unpersist()
-    kmeans._Q_CACHE.clear()
-    for df in kmeans._EMB_Q_CACHE:
-        df.unpersist()
-    kmeans._EMB_Q_CACHE.clear()
-    for q, _books in pq._TRAIN_CACHE.values():
-        q.unpersist()
-    pq._TRAIN_CACHE.clear()
-    for df in pq._QUANT_CACHE.values():
-        df.unpersist()
-    pq._QUANT_CACHE.clear()
-    for df in semdedup._CACHED:
-        df.unpersist()
-    semdedup._CACHED.clear()
+    """Drop every :func:`shared` entry, then clear Spark's cache in each
+    session that used the store and is still running. The two go
+    together: a memoized plan whose ``.cache()`` marks were unpersisted
+    re-executes each multiply-referenced subtree once per reference
+    (simhash scans its signature frame 3x, minhash its shingles 4x), and
+    a dropped handle whose storage stays cached pins executor memory."""
+    with _LOCK:
+        _SHARED.clear()
+        _KEY_LOCKS.clear()
+        sessions = list(_SESSIONS.values())
+    for s in sessions:
+        if s.sparkContext._jsc is not None:  # stopped contexts have none
+            s.catalog.clearCache()
 
 
 def query(name: str, oracle: str | None = None, doc: str = ""):

@@ -40,6 +40,25 @@ PROFILES: dict[str, dict[str, str]] = {
 }
 
 
+def default_driver_mem() -> str:
+    """A quarter of the memory this process may use, between 1 GB and
+    16 GB. The heap grows toward ``-Xmx`` under load, so a fixed 16 GB
+    gets the JVM OOM-killed on a 15 GB host; a quarter leaves room for
+    the Python workers and the JVM's off-heap memory."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    # cgroup v2, then v1; "max" (v2) or a huge number (v1) means no limit.
+    for path in ("/sys/fs/cgroup/memory.max", "/sys/fs/cgroup/memory/memory.limit_in_bytes"):
+        try:
+            with open(path) as f:
+                limit = f.read().strip()
+        except OSError:
+            continue
+        if limit.isdigit():
+            total = min(total, int(limit))
+    mb = total // (4 * 1024 * 1024)
+    return f"{max(1024, min(16 * 1024, mb))}m"
+
+
 def get_spark(
     app_name: str = "minispark_spark",
     master: str | None = None,
@@ -62,7 +81,10 @@ def get_spark(
         )
         # local[N] runs driver + all executor threads in ONE JVM; the 1g
         # default heap causes GC stalls/OOM with 32 concurrent tasks.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_mem(),
+        )
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -88,21 +88,28 @@ def _docs_stream_src(spark: SparkSession, sf_dir: str, leaf: str = "docs4") -> s
     return dest
 
 
-_SCHEMA_CACHE: dict[tuple[str, str], object] = {}
+# Kept apart from registry.shared on purpose: a schema holds no
+# executor storage, and clearing it every bench pass would pay one more
+# footer probe per stream per pass.
+_SCHEMA_CACHE: dict[tuple[str, str], tuple[tuple, object]] = {}
 
 
 def _read_stream(spark: SparkSession, src: str) -> DataFrame:
     # Schema from the batch reader (streaming file sources require an
     # explicit schema); maxFilesPerTrigger=1 forces one micro-batch per
     # file so cross-batch state is actually exercised. The schema probe
-    # is a driver-side footer job — memoized per (app, src dir, mtime)
-    # so two-stream entries (the joins) and repeated bench passes pay
-    # it once (guide §1.2: fixed job latency dominates these drains).
+    # is a driver-side footer job — memoized per (app, src dir) and
+    # validated by the directory's (file name, mtime_ns) set, so
+    # two-stream entries (the joins) and repeated bench passes pay it
+    # once (guide §1.2: fixed job latency dominates these drains), while
+    # an added file or a same-second rewrite probes again.
+    files = tuple(sorted((e.name, e.stat().st_mtime_ns) for e in os.scandir(src)))
+    if not files:
+        raise ValueError(f"stream source directory {src!r} is empty")
     key = (spark.sparkContext.applicationId, src)
-    mt = max(os.path.getmtime(os.path.join(src, f)) for f in os.listdir(src))
     hit = _SCHEMA_CACHE.get(key)
-    if hit is None or hit[0] != mt:
-        _SCHEMA_CACHE[key] = hit = (mt, spark.read.parquet(src).schema)
+    if hit is None or hit[0] != files:
+        _SCHEMA_CACHE[key] = hit = (files, spark.read.parquet(src).schema)
     return (
         spark.readStream.schema(hit[1])
         .option("maxFilesPerTrigger", "1")

@@ -3,13 +3,25 @@ registry twin — the facade adds composition, never new semantics."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
+from minispark_spark import registry
 from minispark_spark.corpus import Corpus
 from minispark_spark.registry import REGISTRY, _ensure_loaded
 from minispark_spark.sources.tables import load_table
 
 _ensure_loaded()
+
+
+@pytest.fixture
+def release_shared():
+    """Drop the registry's shared memo after a sweep over a throw-away
+    corpus. Its entries are keyed by that directory, so nothing reuses
+    them, and the plans and broadcasts they pin would otherwise crowd
+    the driver heap for the rest of the session."""
+    yield
+    registry.clear_plan_cache()
 
 
 def _docs(spark, sf_dir):
@@ -104,6 +116,7 @@ def test_composed_pipeline_is_one_plan(spark, sf_dir):
     assert "Exchange SinglePartition" not in plan
 
 
+@pytest.mark.usefixtures("release_shared")
 def test_edge_docs_oracle_parity(spark, tmp_path):
     """Boundary documents the generated testdata never produces (its
     docs are all 10..99 tokens): empty text, single token, exact chunk/
@@ -162,6 +175,7 @@ def test_edge_docs_oracle_parity(spark, tmp_path):
     assert not failures, "\n".join(failures)
 
 
+@pytest.mark.usefixtures("release_shared")
 def test_edge_vectors_oracle_parity(spark, tmp_path):
     """Adversarial embeddings the generated testdata never produces:
     the zero vector (undefined cosine -> NULL, not a divide-by-zero
@@ -210,6 +224,7 @@ def test_edge_vectors_oracle_parity(spark, tmp_path):
     assert not failures, "\n".join(failures)
 
 
+@pytest.mark.usefixtures("release_shared")
 def test_edge_events_oracle_parity(spark, tmp_path):
     """Adversarial events: same-timestamp ties, gaps exactly at the
     session threshold (caught a session_window oracle semantics bug:
@@ -274,6 +289,7 @@ def test_edge_events_oracle_parity(spark, tmp_path):
     assert not failures, "\n".join(failures)
 
 
+@pytest.mark.usefixtures("release_shared")
 def test_empty_tables_oracle_parity(spark, tmp_path):
     """Every registry query must handle FULLY EMPTY tables (the empty
     partition / empty day every production pipeline eventually feeds)
@@ -316,6 +332,7 @@ def test_empty_tables_oracle_parity(spark, tmp_path):
     assert not failures, "\n".join(failures)
 
 
+@pytest.mark.usefixtures("release_shared")
 def test_single_row_tables_oracle_parity(spark, tmp_path):
     """One row per table (so joins find no FK partners and every group
     has exactly one member): the degenerate-statistics case that broke
@@ -372,6 +389,7 @@ def test_pack_matches_registry(spark, sf_dir):
     assert got == want
 
 
+@pytest.mark.usefixtures("release_shared")
 def test_unicode_docs_oracle_parity(spark, tmp_path):
     """Non-ASCII corpora (accents, CJK, Cyrillic, emoji): the polynomial
     hash folds Unicode CODEPOINTS identically in both engines (Spark

@@ -135,3 +135,55 @@ def test_stream_state_timeout_sessions_expires_and_holds(spark, sf_dir):
     last_user = ev.orderBy(F.col("ts").desc()).select("user_id").first()["user_id"]
     assert out.filter(F.col("user_id") == last_user).count() == 0
     out.unpersist()
+
+
+def test_read_stream_empty_source_names_directory(spark, tmp_path):
+    with pytest.raises(ValueError, match=str(tmp_path)):
+        bounded._read_stream(spark, str(tmp_path))
+
+
+class _CountingReads:
+    """A session proxy that counts batch-reader uses (schema probes)."""
+
+    def __init__(self, spark):
+        self._spark = spark
+        self.probes = 0
+
+    def __getattr__(self, name):
+        return getattr(self._spark, name)
+
+    @property
+    def read(self):
+        self.probes += 1
+        return self._spark.read
+
+
+def test_read_stream_schema_memo_follows_file_set(spark, tmp_path):
+    """The schema memo is keyed by the (file name, mtime_ns) set: a hit
+    pays no probe, while an added file (older than the newest one, so
+    the newest mtime does not move) or a rewrite within the same second
+    probes again."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    src = str(tmp_path)
+    a = os.path.join(src, "part-0.parquet")
+    pq.write_table(pa.table({"x": [1, 2]}), a)
+    s = _CountingReads(spark)
+    assert bounded._read_stream(s, src).schema.names == ["x"]
+    bounded._read_stream(s, src)
+    assert s.probes == 1
+
+    mtime_ns = os.stat(a).st_mtime_ns
+    pq.write_table(pa.table({"y": [1.5]}), a)
+    os.utime(a, ns=(mtime_ns, mtime_ns + 1))
+    assert bounded._read_stream(s, src).schema.names == ["y"]
+    assert s.probes == 2
+
+    b = os.path.join(src, "part-1.parquet")
+    pq.write_table(pa.table({"y": [2.5]}), b)
+    os.utime(b, ns=(mtime_ns - 10**9, mtime_ns - 10**9))
+    bounded._read_stream(s, src)
+    assert s.probes == 3

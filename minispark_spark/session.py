@@ -19,6 +19,7 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # Opt-in conf profiles, each backed by a BASELINE.md measurement.
 #
@@ -107,6 +108,13 @@ def get_spark(
         # by declaration.
         .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
         .config("spark.ui.showConsoleProgress", "false")
+        # Python workers load pyspark from the installed package, not from
+        # Spark's pyspark.zip and jars (see worker_daemon.py): that saves
+        # 136-193 ms of zip-directory re-reads on every Python task. The
+        # package root goes on the workers' path so that the daemon module
+        # imports whatever directory the driver was started from.
+        .config("spark.python.daemon.module", "minispark_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     if profile is not None:
         if profile not in PROFILES:

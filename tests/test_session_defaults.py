@@ -1,5 +1,6 @@
-"""get_spark's defaults: the driver heap follows host memory, and Python
-workers start from the engine's daemon module."""
+"""get_spark's defaults: the driver heap follows host memory, Python
+workers start from the engine's daemon module, and streaming checkpoints
+rename through the Hadoop FileSystem."""
 
 from __future__ import annotations
 
@@ -13,6 +14,7 @@ from minispark_spark.session import default_driver_mem, get_spark
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 DAEMON = "spark.python.daemon.module"
+CHECKPOINT_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
 
 
 def test_default_driver_mem_is_a_quarter_of_host_memory_within_bounds():
@@ -46,6 +48,23 @@ def test_get_spark_sets_the_worker_daemon_module(spark, monkeypatch):
     assert spark.sparkContext.getConf().get(DAEMON) == "minispark_spark.worker_daemon"
     monkeypatch.setattr(session, "SparkSession", SimpleNamespace(builder=_RecordingBuilder()))
     assert get_spark(extra_conf={DAEMON: "pyspark.daemon"})[DAEMON] == "pyspark.daemon"
+
+
+def test_streaming_checkpoints_use_the_filesystem_manager(spark, tmp_path, monkeypatch):
+    # FileContext.rename forks `readlink` for both ends of every checkpoint
+    # rename when the native Hadoop library is absent; FileSystem.rename
+    # does not.
+    jvm = spark._jvm
+    path = jvm.org.apache.hadoop.fs.Path(tmp_path.as_uri())
+    hadoop_conf = spark._jsparkSession.sessionState().newHadoopConf()
+    manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+        path, hadoop_conf
+    )
+    assert manager.getClass().getSimpleName() == "FileSystemBasedCheckpointFileManager"
+    monkeypatch.setattr(session, "SparkSession", SimpleNamespace(builder=_RecordingBuilder()))
+    assert get_spark()[CHECKPOINT_MANAGER].endswith(".FileSystemBasedCheckpointFileManager")
+    custom = "com.example.ObjectStoreCheckpointFileManager"
+    assert get_spark(extra_conf={CHECKPOINT_MANAGER: custom})[CHECKPOINT_MANAGER] == custom
 
 
 def test_package_import_loads_no_pyspark():

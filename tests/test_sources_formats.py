@@ -2,8 +2,12 @@
 
 from __future__ import annotations
 
+import os
+
 from minispark_spark.sources import formats
 from minispark_spark.sources.tables import load_table
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _sorted_rows(df, *cols):
@@ -43,7 +47,7 @@ def test_governed_lakehouse_example_runs():
         capture_output=True,
         text=True,
         timeout=240,
-        cwd="/root/repo",
+        cwd=ROOT,
     )
     assert r.returncode == 0, r.stderr[-2000:]
     assert "versions retained: [1, 2, 3], committed: 3" in r.stdout

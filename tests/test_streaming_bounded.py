@@ -187,3 +187,63 @@ def test_read_stream_schema_memo_follows_file_set(spark, tmp_path):
     os.utime(b, ns=(mtime_ns - 10**9, mtime_ns - 10**9))
     bounded._read_stream(s, src)
     assert s.probes == 3
+
+
+def test_dedup_restart_recovers_state_and_keeps_checksums(spark, sf_dir, tmp_path):
+    """Two availableNow runs on one checkpoint, two source files each:
+    the second run continues the batch ids, its dedup state survived the
+    restart (the collected output equals batch dropDuplicates), and the
+    checkpoint kept its corruption checks: every file has its
+    ChecksumFileSystem ``.crc`` sibling, and every state delta its
+    state-store file checksum."""
+    import os
+    import shutil
+
+    cache = bounded._events_stream_src(spark, sf_dir, "events_dup4", dup=True)
+    parts = sorted(f for f in os.listdir(cache) if f.endswith(".parquet"))
+    assert len(parts) == bounded._N_SOURCE_FILES
+    src, ckpt = tmp_path / "src", tmp_path / "ckpt"
+    src.mkdir()
+    batch_ids: list[list[int]] = [[], []]
+    rows: list[tuple] = []
+
+    # Copies made in one go can share an mtime, so the file order and
+    # with it the final watermark vary; a no-data batch would then take
+    # a batch id in some runs. Data batches alone keep the ids fixed.
+    no_data = "spark.sql.streaming.noDataMicroBatches.enabled"
+    saved = spark.conf.get(no_data)
+    spark.conf.set(no_data, "false")
+    try:
+        for run, chunk in enumerate((parts[:2], parts[2:])):
+            for name in chunk:
+                shutil.copy(os.path.join(cache, name), src / name)
+
+            def sink(batch_df, batch_id, run=run):
+                batch_ids[run].append(batch_id)
+                rows.extend(tuple(r) for r in batch_df.collect())
+
+            q = (
+                bounded.dedup_gate_plan(bounded._read_stream(spark, str(src)), streaming=True)
+                .writeStream.foreachBatch(sink)
+                .option("checkpointLocation", str(ckpt))
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+    finally:
+        spark.conf.set(no_data, saved)
+
+    assert batch_ids == [[0, 1], [2, 3]]
+    batch = bounded.dedup_gate_plan(spark.read.parquet(str(src)), streaming=False)
+    assert sorted(rows) == sorted(tuple(r) for r in batch.collect())
+
+    deltas = 0
+    for sub in ("offsets", "commits", "sources", "state"):
+        for dirpath, _, files in os.walk(ckpt / sub):
+            for name in files:
+                if not name.startswith("."):
+                    assert f".{name}.crc" in files, os.path.join(dirpath, name)
+                if name.endswith(".delta"):
+                    assert f"{name}.crc" in files, os.path.join(dirpath, name)
+                    deltas += 1
+    assert deltas >= 4

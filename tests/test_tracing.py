@@ -4,8 +4,11 @@ analogue of the reference's Perfetto traces, utils.py:47-169)."""
 from __future__ import annotations
 
 import json
+import os
 
 from minispark_spark import tracing
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _fake_log(path, events):
@@ -96,7 +99,7 @@ print(json.dumps({{"app_id": app_id}}))
 """
     proc = subprocess.run(
         [sys.executable, "-c", script], capture_output=True, text=True, timeout=180,
-        cwd="/root/repo",
+        cwd=ROOT,
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
     app_id = json.loads(proc.stdout.strip().splitlines()[-1])["app_id"]

@@ -17,7 +17,7 @@ two key spaces disjoint.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from minispark_spark.registry import query, shared
@@ -57,6 +57,23 @@ def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 # executor memory a broadcast may use. Above that, fall back to shuffle
 # joins (a billion-node graph co-partitions edges and ranks instead).
 BROADCAST_MAX_NODES = 10_000_000
+
+
+def _checkpoint_observed(df: DataFrame, *metrics: Column) -> tuple[DataFrame, dict]:
+    """Eagerly checkpoint ``df`` and return it with ``metrics`` computed
+    over its rows by the same job. Under AQE a lazy ``localCheckpoint()``
+    call already runs the plan's broadcast and shuffle stages, and a
+    probe ``collect()`` after it plans and runs more jobs; observing the
+    eager checkpoint makes a fixpoint round's checkpoint and its
+    convergence probe one job."""
+    obs = Observation()
+    return df.observe(obs, *metrics).localCheckpoint(eager=True), obs.get
+
+
+def _release(ckpt: DataFrame) -> None:
+    """Free a superseded round checkpoint's blocks. Spark's cache manager
+    does not own localCheckpoint RDDs, so ``clearCache()`` cannot."""
+    ckpt._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
 def pagerank_fixed(edges: DataFrame, n_iter: int = N_ITER) -> DataFrame:
@@ -304,9 +321,11 @@ _CHAIN_SQL = f"""
     "provable by induction since floors only lose mass). Damping 1/2 for the "
     "gate — convergence rate equals the damping factor, so 0.85 would "
     "cost ~85 rounds for the identical loop/plan. Per round: one "
-    "broadcast rank join over dst-partitioned cached edges, one "
-    "partial-aggregated contribution sum, one bounded delta aggregate; "
-    "lineage truncated per round via localCheckpoint.",
+    "broadcast rank join over dst-partitioned cached edges and one "
+    "partition-local aggregate, whose zero-contribution self rows also "
+    "carry each node's old rank; the L1 delta and the min/total ranks "
+    "are observed on the round's eager localCheckpoint (one job per "
+    "round, no separate probe or stats aggregate).",
 )
 def graph_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = _edges(spark, sf_dir).unionByName(_chain_edges(spark)).cache()
@@ -361,24 +380,21 @@ def graph_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("real"), (F.col("rank") / F.col("outdeg")).cast("long")
     ).otherwise(F.lit(0).cast("long"))
     ranks = nodes.select("node", F.lit(init).cast("long").alias("rank"))
+    ckpt = None
     iters = 0
     delta = None
     while iters < PR_CONV_MAX_ITERS:
-        contrib = (
-            wedges.join(hint(ranks), F.col("src") == F.col("node"))
-            .select(F.col("dst").alias("node"), c.alias("c"))
-            .groupBy("node")
-            .agg(F.sum("c").alias("in_sum"))
-        )
-        # Carry the previous rank INTO the checkpointed frame (one
-        # extra broadcast-join of the node-sized old vector) so the
-        # delta aggregate below is a bare scan of the checkpoint — no
-        # per-round compare join. The checkpoint is LAZY: the delta
-        # collect is the action that materializes it, so each round
-        # runs ONE job instead of materialize-then-compare (guide §1.2
-        # — fixed job latency dominates node-sized iterations).
+        # Each node's zero-contribution self row carries its OLD rank into
+        # the same aggregate, so the delta needs no second join; the delta
+        # and the final min/total are observed on the round's checkpoint.
         new_with_old = (
-            contrib.join(hint(ranks.withColumnRenamed("rank", "old")), "node")
+            wedges.join(hint(ranks), F.col("src") == F.col("node"))
+            .select(F.col("dst").alias("node"), c.alias("c"), "rank", "real")
+            .groupBy("node")
+            .agg(
+                F.sum("c").alias("in_sum"),
+                F.max(F.when(~F.col("real"), F.col("rank"))).alias("old"),
+            )
             .select(
                 "node",
                 (
@@ -389,20 +405,21 @@ def graph_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("rank"),
                 "old",
             )
-            .localCheckpoint(eager=False)
         )
-        # Bounded action per round: 1-row agg over the checkpointed frame.
-        delta = (
-            new_with_old.agg(F.sum(F.abs(F.col("rank") - F.col("old"))).alias("d"))
-            .collect()[0]["d"]
+        nxt, stats = _checkpoint_observed(
+            new_with_old,
+            F.sum(F.abs(F.col("rank") - F.col("old"))).alias("d"),
+            F.min("rank").alias("min_rank"),
+            F.sum("rank").alias("total"),
         )
-        ranks = new_with_old.select("node", "rank")
+        if ckpt is not None:
+            _release(ckpt)
+        ckpt, ranks = nxt, nxt.select("node", "rank")
+        delta = stats["d"]
         iters += 1
         if delta is not None and delta <= tol:
             break
-    stats = ranks.agg(
-        F.min("rank").alias("min_rank"), F.sum("rank").alias("total")
-    ).collect()[0]
+    _release(ckpt)  # only the observed stats outlive the loop
     row = [
         (
             n_nodes,
@@ -482,11 +499,14 @@ def _cc_level_sql(prev: str, nxt: str) -> str:
     "the fixed-unroll entries converge in <= 3 on the bipartite "
     "purchase graph, which is exactly how the round-3 _PR_ITERS "
     "off-by-one stayed masked — and converged_beyond_unroll pins that "
-    "the loop really ran past the unroll depth. Per round: ONE "
-    "broadcast label join over the cached symmetric edges + one "
-    "map-side-combined min-aggregate; convergence is detected from a "
-    "1-row SUM(label) aggregate (labels are monotone non-increasing, "
-    "so an unchanged sum <=> zero changes — no compare join). "
+    "the loop really ran past the unroll depth. Round 1 is a "
+    "partition-local min over the cached dst-partitioned symmetric "
+    "edges; each later round is ONE broadcast label join + one "
+    "partition-local min-aggregate, with no old-label join "
+    "(min_label_components says why). Convergence is a SUM(label) "
+    "observed on the round's eager localCheckpoint (labels are "
+    "monotone non-increasing, so an unchanged sum <=> zero changes): "
+    "one job per round, no probe aggregate, no compare join. "
     "O(diameter) rounds; the pointer-doubling variant in graph_api "
     "covers the long-diameter regime.",
 )
@@ -504,61 +524,55 @@ def graph_components_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition("dst")
         .cache()
     )
-    n_nodes_est = sym.count()  # materializes the cache; broadcast regime
-    hint = F.broadcast if n_nodes_est <= BROADCAST_MAX_NODES else (lambda df: df)
-    # In the symmetric graph every node has an in-edge, so the per-round
-    # aggregate over dst covers EVERY node — seed labels are simply the
-    # distinct dst set (identity labels), co-partitioned with sym.
-    labels = (
-        sym.select(F.col("dst").alias("node"))
-        .distinct()
-        .select("node", F.col("node").alias("label"))
-        .localCheckpoint(eager=False)  # the seed-sum aggregate materializes it
-    )
-    prev_sum = labels.agg(F.sum("label").alias("s")).collect()[0]["s"]
-    rounds = 0
-    # Min-label propagation converges in <= diameter rounds (the label
-    # sum is a strictly decreasing non-negative integer until fixpoint),
-    # but the cap turns a pathological regenerated gate graph (huge
-    # diameter) into a loud red row instead of an unbounded gate loop —
-    # same discipline as KCORE_CONV_MAX_ROUNDS / CC_STAR_MAX_ROUNDS.
-    import minispark_spark.operators.graph as _g
-
-    while rounds < _g.CC_CONV_MAX_ROUNDS:
-        # min over in-neighbors, partition-local on the dst-partitioned
-        # cache; then fold in the node's own previous label with a
-        # broadcast join + least() — identical integers to the old
-        # union-then-min (min is min), one stage instead of three.
-        prop = (
-            sym.join(hint(labels), F.col("node") == F.col("src"))
-            .select(F.col("dst").alias("node"), "label")
-            .groupBy("node")
-            .agg(F.min("label").alias("in_min"))
-        )
-        labels = (
-            prop.join(
-                hint(labels.withColumnRenamed("label", "old")), "node"
-            )
-            .select("node", F.least(F.col("in_min"), F.col("old")).alias("label"))
-            # LAZY: the convergence sum below is the materializing
-            # action — one job per round, not materialize-then-sum
-            # (guide §1.2: fixed job latency dominates these rounds).
-            .localCheckpoint(eager=False)
-        )
-        cur_sum = labels.agg(F.sum("label").alias("s")).collect()[0]["s"]
-        rounds += 1
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
-    else:
-        raise RuntimeError(
-            f"components_converged: no fixpoint after {_g.CC_CONV_MAX_ROUNDS} rounds"
-        )
+    labels, rounds = min_label_components(sym)
     return labels.select(
         "node",
         F.col("label").alias("component"),
         F.lit(rounds > LP_ROUNDS).alias("converged_beyond_unroll"),
     )
+
+
+def min_label_components(sym: DataFrame) -> tuple[DataFrame, int]:
+    """Min-label connected components of a SYMMETRIC ``(src, dst)`` edge
+    list, run to exact fixpoint: ``(node, label)`` for every node, label
+    = the smallest id in its component, plus the rounds run. Each round
+    is one observed eager checkpoint (``_checkpoint_observed``); a
+    dst-partitioned ``sym`` makes its aggregate partition-local.
+
+    Round 1 starts from identity labels: ``least(min(src), dst)`` per
+    dst. Later rounds take the min over in-neighbours' labels only, with
+    no join against the node's own old label: every node of a symmetric
+    list has a neighbour, and for r >= 1 the neighbours' radius-r balls
+    cover the node's radius-(r+1) ball, which contains the node itself.
+    Labels never increase, so an unchanged label sum means no label
+    changed (the seed sum is the sum of node ids). The round cap
+    (CC_CONV_MAX_ROUNDS) turns a pathological diameter into a loud error
+    instead of an unbounded loop."""
+    labels, m = _checkpoint_observed(
+        sym.select(F.col("dst").alias("node"), "src")
+        .groupBy("node")
+        .agg(F.least(F.min("src"), F.col("node")).alias("label")),
+        F.sum("node").alias("seed"),
+        F.sum("label").alias("s"),
+        F.count(F.lit(1)).alias("n"),
+    )
+    hint = F.broadcast if m["n"] <= BROADCAST_MAX_NODES else (lambda df: df)
+    prev_sum, cur_sum, rounds = m["seed"], m["s"], 1
+    while cur_sum != prev_sum:
+        if rounds >= CC_CONV_MAX_ROUNDS:
+            raise RuntimeError(
+                f"components_converged: no fixpoint after {CC_CONV_MAX_ROUNDS} rounds"
+            )
+        nxt, m = _checkpoint_observed(
+            sym.join(hint(labels), F.col("node") == F.col("src"))
+            .select(F.col("dst").alias("node"), "label")
+            .groupBy("node")
+            .agg(F.min("label").alias("label")),
+            F.sum("label").alias("s"),
+        )
+        _release(labels)
+        labels, prev_sum, cur_sum, rounds = nxt, cur_sum, m["s"], rounds + 1
+    return labels, rounds
 
 
 STAR_LOG_BOUND = 8  # ceil(log2) bound with slack for the gate graph:
@@ -1170,7 +1184,8 @@ _KCORE_GADGET_SQL = """
     "real round count; a deeper graph turns the row red loudly). "
     "FULL value parity: node + fixpoint degree. Per round: one "
     "map-side-combined degree aggregate + two semi joins on the node "
-    "key + a 1-row survivor count; lineage truncated per round.",
+    "key, checkpointed eagerly with the surviving row count observed "
+    "in the same job.",
 )
 def graph_kcore_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     from minispark_spark.functions.pairs import sorted_pair_structs
@@ -1192,29 +1207,30 @@ def graph_kcore_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     sym = e.select(F.col("u").alias("s"), F.col("v").alias("n")).unionAll(
         e.select(F.col("v").alias("s"), F.col("u").alias("n"))
     )
-    # LAZY checkpoints: the per-round convergence count below is the
-    # materializing action, so each peel runs ONE job (guide §1.2).
-    # Convergence is detected on the EDGE count (a scan-count of the
-    # just-checkpointed frame — no distinct shuffle): peeling removes
-    # a node together with ALL its rows in both orientations, so the
-    # directed-row count is unchanged iff no node dropped — the same
-    # fixpoint the node-count compare detected, one exchange cheaper.
-    sym = sym.localCheckpoint(eager=False)
-    prev_edges = sym.count()
+    # Convergence is detected on the EDGE count, observed on each
+    # round's eager checkpoint (one job per peel, no distinct shuffle, no
+    # count job): peeling removes a node together with ALL its rows in
+    # both orientations, so the directed-row count is unchanged iff no
+    # node dropped — the same fixpoint the node-count compare detected.
+    n_rows = F.count(F.lit(1)).alias("n")
+    sym, m = _checkpoint_observed(sym, n_rows)
+    prev_edges = m["n"]
     rounds = 0
     while rounds < KCORE_CONV_MAX_ROUNDS:
         deg = sym.groupBy("s").agg(F.count(F.lit(1)).alias("d"))
         keep = deg.filter(F.col("d") >= KCORE_K).select("s")
-        sym = (
-            sym.join(keep, "s", "left_semi")
-            .join(keep.select(F.col("s").alias("n")), "n", "left_semi")
-            .localCheckpoint(eager=False)
+        nxt, m = _checkpoint_observed(
+            sym.join(keep, "s", "left_semi").join(
+                keep.select(F.col("s").alias("n")), "n", "left_semi"
+            ),
+            n_rows,
         )
+        _release(sym)
+        sym = nxt
         rounds += 1
-        n_edges = sym.count()  # materializes the round's checkpoint
-        if n_edges == prev_edges:
+        if m["n"] == prev_edges:
             break  # peeling removes only — equal count == no drop
-        prev_edges = n_edges
+        prev_edges = m["n"]
     else:
         raise RuntimeError(
             f"graph_kcore_converged: no fixpoint after {KCORE_CONV_MAX_ROUNDS} rounds"

@@ -33,6 +33,7 @@ from __future__ import annotations
 
 import hashlib
 import os
+import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -53,6 +54,19 @@ _N_SOURCE_FILES = 4
 LAST_NUM_BATCHES: dict[str, int] = {}
 
 
+def _pin_part_order(dest: str) -> None:
+    """Give a written source's part files strictly increasing mtimes in
+    part-number order, one second apart. The file stream reads oldest
+    first, and parts written together can share an mtime to the
+    nanosecond, so without this the read order (and with it whether the
+    last batch raises the watermark and a no-data batch follows) would
+    differ between builds of the same data."""
+    now = time.time()
+    parts = sorted(f for f in os.listdir(dest) if f.startswith("part-"))
+    for i, name in enumerate(parts):
+        os.utime(os.path.join(dest, name), (now + i, now + i))
+
+
 def _events_stream_src(spark: SparkSession, sf_dir: str, leaf: str, dup: bool) -> str:
     """Materialize events as a 4-file parquet dir usable as a file-stream
     source (cached per sf_dir + source mtime under the sidecache flock).
@@ -67,6 +81,7 @@ def _events_stream_src(spark: SparkSession, sf_dir: str, leaf: str, dup: bool) -
             if dup:
                 ev = ev.unionAll(ev.where(F.col("event_id") % 10 == 0))
             ev.repartition(_N_SOURCE_FILES).write.mode("overwrite").parquet(dest)
+            _pin_part_order(dest)
             with open(stamp, "w") as fh:
                 fh.write(mt)
     return dest
@@ -83,6 +98,7 @@ def _docs_stream_src(spark: SparkSession, sf_dir: str, leaf: str = "docs4") -> s
         if not (os.path.exists(stamp) and open(stamp).read() == mt):
             docs = load_table(spark, sf_dir, "documents")
             docs.repartition(_N_SOURCE_FILES).write.mode("overwrite").parquet(dest)
+            _pin_part_order(dest)
             with open(stamp, "w") as fh:
                 fh.write(mt)
     return dest
@@ -592,7 +608,6 @@ def _late_stream_src(spark: SparkSession, sf_dir: str) -> str:
     one chunk and the late-drop set is exact."""
     import glob as _glob
     import shutil
-    import time
 
     dest = side_dir("/tmp/minispark_streamlate", sf_dir, "events3")
     stamp = dest + ".stamp"

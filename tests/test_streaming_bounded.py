@@ -247,3 +247,42 @@ def test_dedup_restart_recovers_state_and_keeps_checksums(spark, sf_dir, tmp_pat
                     assert f"{name}.crc" in files, os.path.join(dirpath, name)
                     deltas += 1
     assert deltas >= 4
+
+
+def test_stream_source_parts_read_in_part_order(spark, sf_dir, tmp_path, monkeypatch):
+    """A built stream source gives its part files strictly increasing
+    mtimes in part-number order, so the oldest-first file stream reads
+    every build of the same data in the same order: two fresh builds
+    drain the dedup stream (no-data batches on, the default) with the
+    same batch ids. Parts written together can share an mtime, and then
+    whether a trailing no-data batch ran differed between builds."""
+    import os
+
+    runs = []
+    for build in ("first", "second"):
+        monkeypatch.setattr(
+            bounded, "side_dir", lambda root, sf, leaf, b=build: str(tmp_path / b / leaf)
+        )
+        src = bounded._events_stream_src(spark, sf_dir, "events_dup4", dup=True)
+        parts = sorted(f for f in os.listdir(src) if f.startswith("part-"))
+        assert len(parts) == bounded._N_SOURCE_FILES
+        mtimes = [os.stat(os.path.join(src, f)).st_mtime_ns for f in parts]
+        assert all(a < b for a, b in zip(mtimes, mtimes[1:])), mtimes
+
+        batch_ids: list[int] = []
+
+        def sink(batch_df, batch_id, batch_ids=batch_ids):
+            batch_df.count()  # a sink must consume its batch
+            batch_ids.append(batch_id)
+
+        q = (
+            bounded.dedup_gate_plan(bounded._read_stream(spark, src), streaming=True)
+            .writeStream.foreachBatch(sink)
+            .option("checkpointLocation", str(tmp_path / build / "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        runs.append(batch_ids)
+    assert runs[0] == runs[1]
+    assert len(runs[0]) >= bounded._N_SOURCE_FILES

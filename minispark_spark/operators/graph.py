@@ -76,6 +76,67 @@ def _release(ckpt: DataFrame) -> None:
     ckpt._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
+def _symmetric(e: DataFrame) -> DataFrame:
+    """Both orientations of a ``(src, dst)`` edge list."""
+    return e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+
+
+def _undirected(e: DataFrame) -> DataFrame:
+    """Both orientations ``(s, n)`` of a canonical ``(u, v)`` edge frame."""
+    return e.select(F.col("u").alias("s"), F.col("v").alias("n")).unionAll(
+        e.select(F.col("v").alias("s"), F.col("u").alias("n"))
+    )
+
+
+def _display_name(col: str) -> Column:
+    """A numeric purchase-graph id as its 'c…'/'s…' display name."""
+    return F.concat(
+        F.when(F.col(col) % 2 == 0, F.lit("c")).otherwise(F.lit("s")),
+        F.shiftright(F.col(col), 1).cast("string"),
+    )
+
+
+def _wedges(edges: DataFrame, nodes: DataFrame) -> DataFrame:
+    """The PageRank loops' static graph structure, cached and materialized:
+    each edge fused with its source's outdegree (``real`` = true), plus a
+    zero-contribution self row per node (``real`` = false).
+
+    PARTITIONED BY DST: the per-iteration contribution groupBy (keyed on
+    dst) is then partition-local — with the rank vector broadcast, an
+    iteration runs with ZERO shuffles (Spark's alias-aware partitioning
+    carries dst→node through the projection into the aggregate). The
+    self rows make the aggregate cover EVERY node — in_sum gains an exact
+    +0 and nodes with no in-edges get in_sum=0 — so each iteration needs
+    no nodes-frame join at all: the new rank is a projection of the
+    partition-local aggregate (round 8; one stage and one broadcast build
+    per iteration instead of two of each)."""
+    outdeg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
+    wedges = (
+        edges.join(outdeg, "src")
+        .withColumn("real", F.lit(True))
+        .unionByName(
+            nodes.select(
+                F.col("node").alias("src"),
+                F.col("node").alias("dst"),
+                F.lit(1).alias("outdeg"),
+                F.lit(False).alias("real"),
+            )
+        )
+        .repartition("dst")
+        .cache()
+    )
+    wedges.count()
+    return wedges
+
+
+def _share() -> Column:
+    """A wedge row's integer contribution: ``rank / outdeg`` floored on a
+    real edge, 0 on a self row."""
+    return F.when(
+        F.col("real"), (F.col("rank") / F.col("outdeg")).cast("long")
+    ).otherwise(F.lit(0).cast("long"))
+
+
 def pagerank_fixed(edges: DataFrame, n_iter: int = N_ITER) -> DataFrame:
     """n_iter rounds of integer PageRank over a directed edge list."""
     # Cache the static graph structure once: edges fused with outdegree
@@ -93,33 +154,7 @@ def pagerank_fixed(edges: DataFrame, n_iter: int = N_ITER) -> DataFrame:
         return nodes.select("node", F.lit(0).cast("long").alias("rank"))
     init = SCALE // n_nodes
     base = (15 * SCALE // 100) // n_nodes
-    outdeg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    # Cache the fused edges PARTITIONED BY DST: the per-iteration
-    # contribution groupBy (keyed on dst) is then partition-local —
-    # with the rank vector broadcast, an iteration runs with ZERO
-    # shuffles (Spark's alias-aware partitioning carries dst→node
-    # through the projection into the aggregate). A zero-contribution
-    # self row per node (real=false) makes the aggregate cover EVERY
-    # node — in_sum gains an exact +0 and nodes with no in-edges get
-    # in_sum=0 (identical to the old coalesce(NULL, 0)) — so each
-    # iteration needs no nodes-frame join at all: the new rank is a
-    # projection of the partition-local aggregate (round 8; one stage
-    # and one broadcast build per iteration instead of two of each).
-    wedges = (
-        edges.join(outdeg, "src")
-        .withColumn("real", F.lit(True))
-        .unionByName(
-            nodes.select(
-                F.col("node").alias("src"),
-                F.col("node").alias("dst"),
-                F.lit(1).alias("outdeg"),
-                F.lit(False).alias("real"),
-            )
-        )
-        .repartition("dst")
-        .cache()
-    )
-    wedges.count()
+    wedges = _wedges(edges, nodes)
 
     # The rank vector is |nodes| rows vs |edges| rows of graph structure.
     # Broadcasting it makes each iteration's rank join a map-side hash
@@ -127,14 +162,11 @@ def pagerank_fixed(edges: DataFrame, n_iter: int = N_ITER) -> DataFrame:
     # per-iteration shuffle is the partial-aggregated contribution sum.
     hint = F.broadcast if n_nodes <= BROADCAST_MAX_NODES else (lambda df: df)
 
-    c = F.when(
-        F.col("real"), (F.col("rank") / F.col("outdeg")).cast("long")
-    ).otherwise(F.lit(0).cast("long"))
     ranks = nodes.select("node", F.lit(init).cast("long").alias("rank"))
     for _ in range(n_iter):
         contrib = (
             wedges.join(hint(ranks), F.col("src") == F.col("node"))
-            .select(F.col("dst").alias("node"), c.alias("c"))
+            .select(F.col("dst").alias("node"), _share().alias("c"))
             .groupBy("node")
             .agg(F.sum("c").alias("in_sum"))
         )
@@ -205,11 +237,7 @@ _PR_ITERS = ",".join(_iter_sql(f"r{i}", i + 1) for i in range(N_ITER))
 )
 def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranks = pagerank_fixed(_edges(spark, sf_dir))
-    name = F.concat(
-        F.when(F.col("node") % 2 == 0, F.lit("c")).otherwise(F.lit("s")),
-        F.shiftright(F.col("node"), 1).cast("string"),
-    )
-    return ranks.select(name.alias("node"), "rank")
+    return ranks.select(_display_name("node").alias("node"), "rank")
 
 
 # ---------------------------------------------------------------------------
@@ -348,37 +376,15 @@ def graph_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     tol = PR_CONV_TOL
     base = ((100 - PR_CONV_DAMP) * scale_n // 100) // n_nodes
     init = scale_n // n_nodes
-    outdeg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     # dangling = nodes with no out-edge = n_nodes minus the distinct-src
-    # count, which IS the outdeg frame's cardinality — one aggregate
-    # count instead of the old nodes-vs-distinct-src anti-join (round 8;
-    # same integer by definition).
-    n_dangling = n_nodes - outdeg.count()
-    # Zero-contribution self rows (real=false) make the per-round
-    # aggregate cover EVERY node, exactly as in pagerank_fixed: no
-    # per-round nodes join, no broadcast build of the contribution
-    # frame — each round is one partition-local pass over the cached
+    # count — one aggregate count instead of the old nodes-vs-distinct-src
+    # anti-join (round 8; same integer by definition).
+    n_dangling = n_nodes - edges.select("src").distinct().count()
+    # Each round is one partition-local pass over the cached
     # dst-partitioned wedges plus the (node-sized) old-rank broadcast.
-    wedges = (
-        edges.join(outdeg, "src")
-        .withColumn("real", F.lit(True))
-        .unionByName(
-            nodes.select(
-                F.col("node").alias("src"),
-                F.col("node").alias("dst"),
-                F.lit(1).alias("outdeg"),
-                F.lit(False).alias("real"),
-            )
-        )
-        .repartition("dst")
-        .cache()
-    )
-    wedges.count()
+    wedges = _wedges(edges, nodes)
     hint = F.broadcast if n_nodes <= BROADCAST_MAX_NODES else (lambda df: df)
 
-    c = F.when(
-        F.col("real"), (F.col("rank") / F.col("outdeg")).cast("long")
-    ).otherwise(F.lit(0).cast("long"))
     ranks = nodes.select("node", F.lit(init).cast("long").alias("rank"))
     ckpt = None
     iters = 0
@@ -389,7 +395,7 @@ def graph_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
         # and the final min/total are observed on the round's checkpoint.
         new_with_old = (
             wedges.join(hint(ranks), F.col("src") == F.col("node"))
-            .select(F.col("dst").alias("node"), c.alias("c"), "rank", "real")
+            .select(F.col("dst").alias("node"), _share().alias("c"), "rank", "real")
             .groupBy("node")
             .agg(
                 F.sum("c").alias("in_sum"),
@@ -659,26 +665,35 @@ TRIANGLE_MIN_SUPPORT = 2
     "plan shape).",
 )
 def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
+    e = _part_edges(spark, sf_dir).cache()
+    e.count()  # materialize: three concurrent scans below
+    return triangles(e)
+
+
+def _part_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The part co-occurrence graph: canonical ``(u, v)`` edges (u < v)
+    between parts sharing >= TRIANGLE_MIN_SUPPORT orders — one shuffle to
+    group baskets, JVM-side i<j pair expansion, one shuffle to count
+    pairs. Uncached: a caller that scans it more than once caches it."""
+    from minispark_spark.functions.pairs import sorted_pair_structs
+
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     baskets = li.groupBy("l_orderkey").agg(
         F.array_sort(F.collect_set("l_partkey")).alias("parts")
     )
-    pair = F.explode(
-        F.expr(
-            "flatten(transform(parts, (x, i) -> "
-            "transform(slice(parts, i + 2, size(parts)), y -> "
-            "struct(x AS u, y AS v))))"
-        )
-    )
-    e = (
-        baskets.select(pair.alias("p"))
+    return (
+        baskets.select(F.explode(sorted_pair_structs("parts", "u", "v")).alias("p"))
         .groupBy("p.u", "p.v")
         .agg(F.count(F.lit(1)).alias("w"))
         .filter(F.col("w") >= TRIANGLE_MIN_SUPPORT)
         .select("u", "v")
-        .cache()
     )
-    e.count()  # materialize: three concurrent scans below
+
+
+def triangles(e: DataFrame) -> DataFrame:
+    """Every triangle of a canonical ``(u < v, distinct)`` edge frame
+    once, as ``(node_a < node_b < node_c)``: two self-joins of ``e``,
+    which is scanned three times (cache it)."""
     e1 = e.alias("e1")
     e2 = e.alias("e2")
     e3 = e.alias("e3")
@@ -694,6 +709,19 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("e1.v").alias("node_b"),
             F.col("e2.v").alias("node_c"),
         )
+    )
+
+
+def triangle_counts(e: DataFrame) -> DataFrame:
+    """``(node, t)``: the triangles of ``e`` each corner is in, for nodes
+    in at least one."""
+    tri = triangles(e)
+    return (
+        tri.select(F.col("node_a").alias("node"))
+        .unionByName(tri.select(F.col("node_b").alias("node")))
+        .unionByName(tri.select(F.col("node_c").alias("node")))
+        .groupBy("node")
+        .agg(F.count(F.lit(1)).alias("t"))
     )
 
 
@@ -744,22 +772,27 @@ def _bfs_iter_sql(prev: str, nxt: str) -> str:
     "level-unrolled oracle replays the distributed algorithm instead).",
 )
 def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _edges(spark, sf_dir)
+    reached = bfs_hops(_symmetric(_edges(spark, sf_dir)), BFS_SOURCE)
+    return reached.select(
+        _display_name("node").alias("node"), F.col("h").cast("int").alias("hops")
+    )
+
+
+def bfs_hops(sym: DataFrame, source, hops: int = BFS_HOPS) -> DataFrame:
+    """``(node, h)``: shortest hop counts from ``source`` within ``hops``
+    levels over a symmetric ``(src, dst)`` edge list. Each level is one
+    eagerly checkpointed frame; the level it supersedes is released."""
     # dst-partitioned like the other round-8 loops: the per-level
     # frontier aggregate keys on dst, so pre-aggregating nxt is
     # partition-local — the union's min-fold then shuffles two
     # NODE-sized frames instead of an edge-sized one per level.
-    sym = (
-        e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .repartition("dst")
-        .cache()
+    sym = sym.repartition("dst").cache()
+    sym.count()  # materialize once; all levels scan it
+    reached = sym.sparkSession.range(1).select(
+        F.lit(source).cast(sym.schema["src"].dataType).alias("node"),
+        F.lit(0).alias("h"),
     )
-    sym.count()  # materialize once; all BFS_HOPS levels scan it
-    reached = (
-        sym.sparkSession.range(1)
-        .select(F.lit(BFS_SOURCE).cast("long").alias("node"), F.lit(0).alias("h"))
-    )
-    for _ in range(BFS_HOPS):
+    for level in range(hops):
         # The reached set is bounded by the node count — broadcast it so
         # each level probes the cached edges map-side (zero edge
         # shuffle; pagerank's broadcast-rank-vector pattern, same
@@ -771,7 +804,7 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.min("h").alias("h"))  # partition-local on the
             # dst-partitioned cache; min-of-min below is unchanged
         )
-        reached = (
+        new = (
             reached.unionByName(nxt).groupBy("node").agg(F.min("h").alias("h"))
             # Truncate lineage each level: the lazy chain would re-run
             # ALL prior levels inside every broadcast (O(H^2) edge
@@ -787,11 +820,10 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
         # checkpoint those two consumers race to materialize it and the
         # level computes twice (the LP final-round lesson). One
         # materialization job per level is the floor for this loop.
-    name = F.concat(
-        F.when(F.col("node") % 2 == 0, F.lit("c")).otherwise(F.lit("s")),
-        F.shiftright(F.col("node"), 1).cast("string"),
-    )
-    return reached.select(name.alias("node"), F.col("h").cast("int").alias("hops"))
+        if level:
+            _release(reached)
+        reached = new
+    return reached
 
 
 LP_ROUNDS = 3
@@ -869,7 +901,16 @@ def lp_round(sym: DataFrame, labels: DataFrame, broadcast: bool = True) -> DataF
     "co-partitioned shuffle join.",
 )
 def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _edges(spark, sf_dir)
+    labels = label_propagation(_symmetric(_edges(spark, sf_dir)))
+    return labels.select(
+        _display_name("node").alias("node"), _display_name("label").alias("community")
+    )
+
+
+def label_propagation(sym: DataFrame, rounds: int = LP_ROUNDS) -> DataFrame:
+    """``(node, label)`` after ``rounds`` synchronous LP rounds over a
+    symmetric ``(src, dst)`` edge list, from identity labels. Only the
+    returned final round's checkpoint stays stored."""
     # Cache the symmetrized view PARTITIONED BY DST (round 8, the
     # pagerank-wedges / components_converged trick): both per-round
     # aggregates key on dst — hash(dst) satisfies the (dst, label)
@@ -879,15 +920,13 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # build. (Round 7 had measured a plain unpartitioned sym cache as a
     # LOSS — that one only deduplicated the projection, it removed no
     # exchange.)
-    sym = (
-        e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .repartition("dst")
-        .cache()
-    )
+    sym = sym.repartition("dst").cache()
     nodes = sym.select(F.col("src").alias("node")).distinct().cache()
     n_nodes = nodes.count()  # materializes; decides the broadcast regime
     labels = nodes.select("node", F.col("node").alias("label"))
-    for i in range(LP_ROUNDS):
+    inner = []
+    for i in range(rounds):
+        inner.append(labels)
         labels = lp_round(
             sym, labels, broadcast=n_nodes <= BROADCAST_MAX_NODES
             # Truncate lineage: a lazy label chain re-executes all prior
@@ -899,16 +938,10 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
             # downstream consumers (graph_modularity joins the labels
             # three times) would otherwise race concurrent broadcast
             # builds into duplicate computes of the last round.
-        ).localCheckpoint(eager=(i == LP_ROUNDS - 1))
-    name = F.concat(
-        F.when(F.col("node") % 2 == 0, F.lit("c")).otherwise(F.lit("s")),
-        F.shiftright(F.col("node"), 1).cast("string"),
-    )
-    community = F.concat(
-        F.when(F.col("label") % 2 == 0, F.lit("c")).otherwise(F.lit("s")),
-        F.shiftright(F.col("label"), 1).cast("string"),
-    )
-    return labels.select(name.alias("node"), community.alias("community"))
+        ).localCheckpoint(eager=(i == rounds - 1))
+    for ckpt in inner[1:]:  # inner[0] is the identity labels
+        _release(ckpt)
+    return labels
 
 
 LINKPRED_DEG_CAP = 40
@@ -962,20 +995,7 @@ LINKPRED_MIN_CN = 2
     "degree joins — each keyed on part ids, skew-bounded by the cap.",
 )
 def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from minispark_spark.functions.pairs import sorted_pair_structs
-
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    baskets = li.groupBy("l_orderkey").agg(
-        F.array_sort(F.collect_set("l_partkey")).alias("parts")
-    )
-    e = (
-        baskets.select(F.explode(sorted_pair_structs("parts", "u", "v")).alias("p"))
-        .groupBy("p.u", "p.v")
-        .agg(F.count(F.lit(1)).alias("w"))
-        .filter(F.col("w") >= TRIANGLE_MIN_SUPPORT)
-        .select("u", "v")
-        .cache()
-    )
+    e = _part_edges(spark, sf_dir).cache()
     e.count()  # materialize: sym is scanned for degrees, middles, and pairs
     return link_prediction_scores(e).select(
         F.col("u").alias("part_a"),
@@ -996,11 +1016,9 @@ def link_prediction_scores(
     see graph_link_prediction's docstring for the hub-cap rationale."""
     from minispark_spark.functions.pairs import sorted_pair_structs
 
-    sym = e.select(F.col("u").alias("s"), F.col("v").alias("n")).unionAll(
-        e.select(F.col("v").alias("s"), F.col("u").alias("n"))
-    )
+    sym = _undirected(e)
     deg = sym.groupBy("s").agg(F.count(F.lit(1)).alias("d"))
-    nbrs = sym.groupBy("s").agg(F.array_sort(F.collect_set("n")).alias("ns"))
+    nbrs =sym.groupBy("s").agg(F.array_sort(F.collect_set("n")).alias("ns"))
     cn = (
         nbrs.filter(F.size("ns") <= deg_cap)
         .select(F.explode(sorted_pair_structs("ns", "u", "v")).alias("p"))
@@ -1067,33 +1085,29 @@ def _kcore_iter_sql(prev: str, i: int) -> str:
     "detection at scale.",
 )
 def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from minispark_spark.functions.pairs import sorted_pair_structs
+    return kcore(_undirected(_part_edges(spark, sf_dir)))
 
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    baskets = li.groupBy("l_orderkey").agg(
-        F.array_sort(F.collect_set("l_partkey")).alias("parts")
+
+def _peel(sym: DataFrame, k: int) -> DataFrame:
+    """One k-core peel of ``(s, n)`` rows: keep the rows whose both ends
+    have degree >= k."""
+    deg = sym.groupBy("s").agg(F.count(F.lit(1)).alias("d"))
+    keep = deg.filter(F.col("d") >= k).select("s")
+    return sym.join(keep, "s", "left_semi").join(
+        keep.select(F.col("s").alias("n")), "n", "left_semi"
     )
-    e = (
-        baskets.select(F.explode(sorted_pair_structs("parts", "u", "v")).alias("p"))
-        .groupBy("p.u", "p.v")
-        .agg(F.count(F.lit(1)).alias("w"))
-        .filter(F.col("w") >= TRIANGLE_MIN_SUPPORT)
-        .select("u", "v")
-    )
-    sym = e.select(F.col("u").alias("s"), F.col("v").alias("n")).unionAll(
-        e.select(F.col("v").alias("s"), F.col("u").alias("n"))
-    )
+
+
+def kcore(sym: DataFrame, k: int = KCORE_K, rounds: int = KCORE_ROUNDS) -> DataFrame:
+    """``(node, degree)`` after ``rounds`` k-core peels of an undirected
+    ``(s, n)`` edge list holding both orientations of each edge."""
     # Truncate lineage per peel — without this every round's lazy chain
     # re-executes all prior rounds per action (the BFS lesson).
     sym = sym.localCheckpoint(eager=True)
-    for _ in range(KCORE_ROUNDS):
-        deg = sym.groupBy("s").agg(F.count(F.lit(1)).alias("d"))
-        keep = deg.filter(F.col("d") >= KCORE_K).select("s")
-        sym = (
-            sym.join(keep, "s", "left_semi")
-            .join(keep.select(F.col("s").alias("n")), "n", "left_semi")
-            .localCheckpoint(eager=True)
-        )
+    for _ in range(rounds):
+        nxt = _peel(sym, k).localCheckpoint(eager=True)
+        _release(sym)
+        sym = nxt
     return sym.groupBy(F.col("s").alias("node")).agg(
         F.count(F.lit(1)).alias("degree")
     )
@@ -1188,24 +1202,10 @@ _KCORE_GADGET_SQL = """
     "in the same job.",
 )
 def graph_kcore_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from minispark_spark.functions.pairs import sorted_pair_structs
-
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    baskets = li.groupBy("l_orderkey").agg(
-        F.array_sort(F.collect_set("l_partkey")).alias("parts")
-    )
-    e = (
-        baskets.select(F.explode(sorted_pair_structs("parts", "u", "v")).alias("p"))
-        .groupBy("p.u", "p.v")
-        .agg(F.count(F.lit(1)).alias("w"))
-        .filter(F.col("w") >= TRIANGLE_MIN_SUPPORT)
-        .select("u", "v")
-        .unionByName(
-            li.sparkSession.createDataFrame(_kcore_gadget_pairs(), "u long, v long")
+    sym = _undirected(
+        _part_edges(spark, sf_dir).unionByName(
+            spark.createDataFrame(_kcore_gadget_pairs(), "u long, v long")
         )
-    )
-    sym = e.select(F.col("u").alias("s"), F.col("v").alias("n")).unionAll(
-        e.select(F.col("v").alias("s"), F.col("u").alias("n"))
     )
     # Convergence is detected on the EDGE count, observed on each
     # round's eager checkpoint (one job per peel, no distinct shuffle, no
@@ -1217,14 +1217,7 @@ def graph_kcore_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     prev_edges = m["n"]
     rounds = 0
     while rounds < KCORE_CONV_MAX_ROUNDS:
-        deg = sym.groupBy("s").agg(F.count(F.lit(1)).alias("d"))
-        keep = deg.filter(F.col("d") >= KCORE_K).select("s")
-        nxt, m = _checkpoint_observed(
-            sym.join(keep, "s", "left_semi").join(
-                keep.select(F.col("s").alias("n")), "n", "left_semi"
-            ),
-            n_rows,
-        )
+        nxt, m = _checkpoint_observed(_peel(sym, KCORE_K), n_rows)
         _release(sym)
         sym = nxt
         rounds += 1
@@ -1291,23 +1284,28 @@ from minispark_spark.registry import REGISTRY as _REG  # noqa: E402
 def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     comm = graph_label_propagation(spark, sf_dir)
     e = _edges(spark, sf_dir)
-    name = lambda col: F.concat(  # noqa: E731 — numeric id -> display name
-        F.when(F.col(col) % 2 == 0, F.lit("c")).otherwise(F.lit("s")),
-        F.shiftright(F.col(col), 1).cast("string"),
-    )
-    nedges = e.select(name("src").alias("src"), name("dst").alias("dst")).cache()
-    mm = F.broadcast(nedges.agg(F.count(F.lit(1)).alias("m")))
+    nedges = e.select(
+        _display_name("src").alias("src"), _display_name("dst").alias("dst")
+    ).cache()
+    return modularity_terms(nedges, comm)
+
+
+def modularity_terms(und: DataFrame, comm: DataFrame) -> DataFrame:
+    """``(community, d_c, l_c, q_term)``: the Newman modularity term of
+    each community of ``comm`` ``(node, community)`` over the undirected
+    edges ``und`` ``(src, dst)``, each edge listed once."""
+    mm = F.broadcast(und.agg(F.count(F.lit(1)).alias("m")))
     cs = comm.select(F.col("node").alias("src"), F.col("community").alias("c_src"))
     cd = comm.select(F.col("node").alias("dst"), F.col("community").alias("c_dst"))
     intra = (
-        nedges.join(cs, "src")
+        und.join(cs, "src")
         .join(cd, "dst")
         .filter(F.col("c_src") == F.col("c_dst"))
         .groupBy(F.col("c_src").alias("community"))
         .agg(F.count(F.lit(1)).alias("l_c"))
     )
-    endpoints = nedges.select(F.col("src").alias("node")).unionByName(
-        nedges.select(F.col("dst").alias("node"))
+    endpoints = und.select(F.col("src").alias("node")).unionByName(
+        und.select(F.col("dst").alias("node"))
     )
     deg = (
         endpoints.join(comm, "node")
@@ -1377,41 +1375,28 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     "community parts — pairs with graph_modularity's global view.",
 )
 def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tri = graph_triangle_count(spark, sf_dir)
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    baskets = li.groupBy("l_orderkey").agg(
-        F.array_sort(F.collect_set("l_partkey")).alias("parts")
-    )
-    pair = F.explode(
-        F.expr(
-            "flatten(transform(parts, (x, i) -> "
-            "transform(slice(parts, i + 2, size(parts)), y -> "
-            "struct(x AS u, y AS v))))"
-        )
-    )
-    e = (
-        baskets.select(pair.alias("p"))
-        .groupBy("p.u", "p.v")
-        .agg(F.count(F.lit(1)).alias("w"))
-        .filter(F.col("w") >= TRIANGLE_MIN_SUPPORT)
-        .select("u", "v")
-    )
-    deg = (
+    e = _part_edges(spark, sf_dir).cache()
+    e.count()  # materialize: degrees and three triangle scans below
+    return clustering_coefficient(e)
+
+
+def _degrees(e: DataFrame) -> DataFrame:
+    """``(node, d)``: the undirected degree of each endpoint of ``e``."""
+    return (
         e.select(F.col("u").alias("node"))
         .unionByName(e.select(F.col("v").alias("node")))
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("d"))
     )
-    tcnt = (
-        tri.select(F.col("node_a").alias("node"))
-        .unionByName(tri.select(F.col("node_b").alias("node")))
-        .unionByName(tri.select(F.col("node_c").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("t"))
-    )
+
+
+def clustering_coefficient(e: DataFrame) -> DataFrame:
+    """``(node, degree, triangles, cc)`` for the nodes of degree >= 2 of a
+    canonical ``(u < v, distinct)`` edge frame (cache it: it is scanned
+    four times)."""
     t = F.coalesce(F.col("t"), F.lit(0))
     return (
-        deg.join(tcnt, "node", "left")
+        _degrees(e).join(triangle_counts(e), "node", "left")
         .filter(F.col("d") >= 2)
         .select(
             "node",
@@ -1463,32 +1448,15 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     "frame.",
 )
 def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    baskets = li.groupBy("l_orderkey").agg(
-        F.array_sort(F.collect_set("l_partkey")).alias("parts")
-    )
-    pair = F.explode(
-        F.expr(
-            "flatten(transform(parts, (x, i) -> "
-            "transform(slice(parts, i + 2, size(parts)), y -> "
-            "struct(x AS u, y AS v))))"
-        )
-    )
-    e = (
-        baskets.select(pair.alias("p"))
-        .groupBy("p.u", "p.v")
-        .agg(F.count(F.lit(1)).alias("w"))
-        .filter(F.col("w") >= TRIANGLE_MIN_SUPPORT)
-        .select("u", "v")
-        .cache()
-    )
-    deg = (
-        e.select(F.col("u").alias("node"))
-        .unionByName(e.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
-    du = F.broadcast(deg.select(F.col("node").alias("u"), F.col("d").alias("xu")))
+    return assortativity(_part_edges(spark, sf_dir).cache())
+
+
+def assortativity(e: DataFrame) -> DataFrame:
+    """``(n_ends, r)``: the degree assortativity of a canonical
+    ``(u < v, distinct)`` edge frame (cache it: it is scanned three
+    times)."""
+    deg = _degrees(e)
+    du =F.broadcast(deg.select(F.col("node").alias("u"), F.col("d").alias("xu")))
     dv = F.broadcast(deg.select(F.col("node").alias("v"), F.col("d").alias("xv")))
     joined = e.join(du, "u").join(dv, "v")
     ends = joined.select(F.col("xu").alias("x"), F.col("xv").alias("y")).unionByName(
@@ -1577,54 +1545,37 @@ _PPR_ITERS = ",".join(
     "hold rank 0 and are filtered.",
 )
 def graph_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _edges(spark, sf_dir)
-    sym = e.unionByName(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).cache()
+    is_seed = (F.col("node") % 2 == 0) & (F.col("node") < 2 * PPR_SEED_MAX_CUSTKEY)
+    ranks = personalized_pagerank(_symmetric(_edges(spark, sf_dir)), is_seed)
+    return ranks.select(_display_name("node").alias("node"), "rank")
+
+
+def personalized_pagerank(
+    sym: DataFrame, is_seed: Column, n_iter: int = N_ITER
+) -> DataFrame:
+    """``(node, rank)`` for the nodes of rank > 0 after ``n_iter`` rounds
+    of integer personalized PageRank (damping 0.85) over a symmetric
+    ``(src, dst)`` edge list, teleporting to the nodes where ``is_seed``
+    (a Column over ``node``) holds. Empty when no node is a seed."""
+    sym = sym.cache()
     nodes = sym.select(F.col("src").alias("node")).distinct().cache()
-    is_seed = (F.col("node") % 2 == 0) & (
-        F.col("node") < 2 * PPR_SEED_MAX_CUSTKEY
-    )
     n_seeds = nodes.filter(is_seed).count()  # bounded: seed-set size
     if n_seeds == 0:
-        return nodes.select(
-            F.lit("").alias("node"), F.lit(0).cast("long").alias("rank")
-        ).limit(0)
+        return nodes.select("node", F.lit(0).cast("long").alias("rank")).limit(0)
     init = SCALE // n_seeds
     base = (15 * SCALE // 100) // n_seeds
-    outdeg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    # Zero-contribution self rows (real=false): the per-round aggregate
-    # covers EVERY node, so the new rank is a projection of the
-    # partition-local aggregate — no per-round nodes join, no broadcast
-    # build of the contribution frame (round 8, the pagerank_fixed
-    # pattern; the seed-teleport term is an expression on the node id,
-    # so it needs no node-frame lookup either).
-    wedges = (
-        sym.join(outdeg, "src")
-        .withColumn("real", F.lit(True))
-        .unionByName(
-            nodes.select(
-                F.col("node").alias("src"),
-                F.col("node").alias("dst"),
-                F.lit(1).alias("outdeg"),
-                F.lit(False).alias("real"),
-            )
-        )
-        .repartition("dst")
-        .cache()
-    )
-    wedges.count()
+    # The seed-teleport term is an expression on the node id, so the
+    # per-round projection of the wedge aggregate needs no node-frame
+    # lookup (round 8, the pagerank_fixed pattern).
+    wedges = _wedges(sym, nodes)
     hint = F.broadcast  # node count bounded at these scales (see pagerank)
-    c = F.when(
-        F.col("real"), (F.col("rank") / F.col("outdeg")).cast("long")
-    ).otherwise(F.lit(0).cast("long"))
     ranks = nodes.select(
         "node", F.when(is_seed, init).otherwise(0).cast("long").alias("rank")
     )
-    for _ in range(N_ITER):
+    for _ in range(n_iter):
         contrib = (
             wedges.join(hint(ranks), F.col("src") == F.col("node"))
-            .select(F.col("dst").alias("node"), c.alias("c"))
+            .select(F.col("dst").alias("node"), _share().alias("c"))
             .groupBy("node")
             .agg(F.sum("c").alias("in_sum"))
         )
@@ -1640,8 +1591,4 @@ def graph_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             # one reference per round, no dedicated job (§1.2).
             .localCheckpoint(eager=False)
         )
-    name = F.concat(
-        F.when(F.col("node") % 2 == 0, F.lit("c")).otherwise(F.lit("s")),
-        F.shiftright(F.col("node"), 1).cast("string"),
-    )
-    return ranks.filter(F.col("rank") > 0).select(name.alias("node"), "rank")
+    return ranks.filter(F.col("rank") > 0)

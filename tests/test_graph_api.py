@@ -23,6 +23,14 @@ def graph(spark):
     return Graph(vertices, edges)
 
 
+def _part_graph(spark, sf_dir):
+    """The part co-occurrence graph the registry's part-graph entries use."""
+    from minispark_spark.operators.graph import _part_edges
+
+    e = _part_edges(spark, sf_dir)
+    return Graph.from_edges(e.select(F.col("u").alias("src"), F.col("v").alias("dst")))
+
+
 def test_degrees_include_isolated_vertices(graph):
     rows = {r["id"]: r["degree"] for r in graph.degrees().collect()}
     assert rows == {0: 2, 1: 2, 2: 2, 3: 1, 4: 1, 5: 0}
@@ -123,27 +131,11 @@ def test_link_prediction_hand_graph(spark):
 def test_link_prediction_matches_registry(spark, sf_dir):
     """Graph facade over the part co-occurrence edges must reproduce
     the oracle-verified registry query exactly."""
-    from pyspark.sql import functions as F
-
-    from minispark_spark.functions.pairs import sorted_pair_structs
-    from minispark_spark.operators.graph import TRIANGLE_MIN_SUPPORT
     from minispark_spark.registry import REGISTRY
-    from minispark_spark.sources.tables import load_table
 
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    baskets = li.groupBy("l_orderkey").agg(
-        F.array_sort(F.collect_set("l_partkey")).alias("parts")
-    )
-    e = (
-        baskets.select(F.explode(sorted_pair_structs("parts", "u", "v")).alias("p"))
-        .groupBy("p.u", "p.v")
-        .agg(F.count(F.lit(1)).alias("w"))
-        .filter(F.col("w") >= TRIANGLE_MIN_SUPPORT)
-        .select(F.col("u").alias("src"), F.col("v").alias("dst"))
-    )
     got = {
         (r["u"], r["v"]): (r["common_neighbors"], r["jaccard_lb"])
-        for r in Graph.from_edges(e).link_prediction().collect()
+        for r in _part_graph(spark, sf_dir).link_prediction().collect()
     }
     want = {
         (r["part_a"], r["part_b"]): (r["common_neighbors"], r["jaccard_lb"])
@@ -232,31 +224,44 @@ def test_assortativity_star_is_minus_one(spark):
 
 def test_clustering_matches_registry(spark, sf_dir):
     from minispark_spark.registry import REGISTRY
-    from minispark_spark.sources.tables import load_table
 
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    baskets = li.groupBy("l_orderkey").agg(
-        F.array_sort(F.collect_set("l_partkey")).alias("parts")
-    )
-    pair = F.explode(
-        F.expr(
-            "flatten(transform(parts, (x, i) -> "
-            "transform(slice(parts, i + 2, size(parts)), y -> "
-            "struct(x AS u, y AS v))))"
-        )
-    )
-    e = (
-        baskets.select(pair.alias("p"))
-        .groupBy("p.u", "p.v")
-        .agg(F.count(F.lit(1)).alias("w"))
-        .filter(F.col("w") >= 2)
-        .select(F.col("u").alias("src"), F.col("v").alias("dst"))
-    )
     got = {r["id"]: (r["degree"], r["triangles"], r["cc"])
-           for r in Graph.from_edges(e).clustering_coefficient().collect()}
+           for r in _part_graph(spark, sf_dir).clustering_coefficient().collect()}
     want = {r["node"]: (r["degree"], r["triangles"], r["cc"])
             for r in REGISTRY["graph_clustering_coefficient"].fn(spark, sf_dir).collect()}
     assert got == want
+
+
+def test_k_core_matches_registry(spark, sf_dir):
+    from minispark_spark.registry import REGISTRY
+
+    got = {r["id"]: r["degree"] for r in _part_graph(spark, sf_dir).k_core().collect()}
+    want = {r["node"]: r["degree"]
+            for r in REGISTRY["graph_kcore"].fn(spark, sf_dir).collect()}
+    assert got == want and want
+
+
+def test_triangle_count_matches_registry(spark, sf_dir):
+    """The facade's non-zero per-vertex counts are the registry's
+    triangles counted once per corner."""
+    from collections import Counter
+
+    from minispark_spark.registry import REGISTRY
+
+    got = {r["id"]: r["count"]
+           for r in _part_graph(spark, sf_dir).triangle_count().collect() if r["count"]}
+    want = Counter()
+    for r in REGISTRY["graph_triangle_count"].fn(spark, sf_dir).collect():
+        want.update((r["node_a"], r["node_b"], r["node_c"]))
+    assert got == dict(want) and want
+
+
+def test_assortativity_matches_registry(spark, sf_dir):
+    from minispark_spark.registry import REGISTRY
+
+    got = _part_graph(spark, sf_dir).assortativity().collect()
+    want = REGISTRY["graph_assortativity"].fn(spark, sf_dir).collect()
+    assert [tuple(r) for r in got] == [tuple(r) for r in want]
 
 
 def test_personalized_page_rank_seeds_hold_mass(spark):

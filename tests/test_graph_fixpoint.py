@@ -5,7 +5,8 @@ convergence probe observed in the same job. Pinned here:
 - the min-label loop, which drops the old-label join after round 1,
   matches a Python union-find's component minima on generated graphs;
 - a loop releases every superseded round checkpoint, so the only
-  checkpoint left behind is the frame it returns.
+  checkpoint left behind is the frame it returns. The fixed-round BFS,
+  k-core and label-propagation loops are held to the same rule.
 """
 
 from __future__ import annotations
@@ -89,6 +90,9 @@ def _persistent_rdds(spark) -> dict[int, str | None]:
         (g.graph_components_converged, 1),  # the returned labels
         (g.graph_kcore_converged, 1),  # the returned peeled edges
         (g.graph_pagerank_converged, 0),  # returns observed stats only
+        (g.graph_bfs_hops, 1),  # the last level (4 left before release)
+        (g.graph_kcore, 1),  # the last peel (5 left before release)
+        (g.graph_label_propagation, 1),  # the final round (3 left before release)
     ],
 )
 def test_fixpoint_loops_release_superseded_checkpoints(spark, sf_dir, fn, checkpoints_left):
